@@ -10,25 +10,45 @@
 #   run (a reused dir made the comparator score stale outputs from a prior
 #   build as current — r13 review finding), and the report is filtered to
 #   exactly the keys run so a FAIL can never scroll out of the tail.
+# Both legs always run and report; the exit status is non-zero when Verify
+# or the comparator failed on either leg.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SUBSET="${1:-}"
+STATUS=0
 for SF in sf0.001 sf0.01; do
   OUT="/tmp/verify_sweep_$SF"
   rm -rf "$OUT"
   echo "== $SF =="
+  # sbt's status is captured explicitly, not through a pipe: under
+  # pipefail a grep with no matching [verify] line would end the sweep
+  # before the comparator reports
+  SBT_RC=0
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
     sbt -batch "runMain graft.Verify /root/testdata/$SF $OUT $SUBSET" \
-    2>&1 | grep -E '\[verify\] .* (ok|FAIL)' | tail -3
+    > "$OUT.log" 2>&1 || SBT_RC=$?
+  grep -E '\[verify\] .* (ok|FAIL)' "$OUT.log" | tail -3 || true
+  if [ "$SBT_RC" -ne 0 ]; then
+    echo "Verify exited $SBT_RC (full log: $OUT.log)"; STATUS=1
+  fi
+  set +e
   REPORT=$(python3 scripts/check_correctness.py "$OUT" "/root/testdata/$SF")
+  CHECK_RC=$?
+  set -e
+  if [ "$CHECK_RC" -ne 0 ]; then
+    echo "check_correctness.py exited $CHECK_RC"; STATUS=1
+  fi
   if [ -n "$SUBSET" ]; then
     # per-key exact lines: with the wiped dir, only the run keys can PASS
     for K in ${SUBSET//,/ }; do
       echo "$REPORT" | grep -E "^(PASS|FAIL) +$K( |\$)" \
         || echo "NO-RESULT $K (check the Verify log above)"
+      echo "$REPORT" | grep -qE "^PASS +$K( |\$)" || STATUS=1
     done
   else
     echo "$REPORT" | grep -E "^FAIL" || true
     echo "$REPORT" | tail -1
+    if echo "$REPORT" | grep -qE "^FAIL"; then STATUS=1; fi
   fi
 done
+exit "$STATUS"

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Plan/timing inspector: `runMain graft.Explain <query> [sfDir] [runs]` —
   * times the query in-JVM (warm runs expose structural cost vs first-run
@@ -40,12 +41,15 @@ object Explain {
         // counters (ADVICE r12: a fixed sleep under load let events bleed
         // into the next run's counters). listenerBus is private[spark], so
         // reach it reflectively; fall back to the old sleep if the internal
-        // API ever moves.
+        // API ever moves. An interrupt is passed on, not swallowed.
         try {
           val bus = spark.sparkContext.getClass.getMethod("listenerBus")
             .invoke(spark.sparkContext)
           bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        } catch { case _: Throwable => Thread.sleep(150) }
+        } catch {
+          case _: InterruptedException => Thread.currentThread().interrupt()
+          case NonFatal(_) => Thread.sleep(150)
+        }
         println(f"$name%-26s RUN$i rows=$n time=$sec%.2f s jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get}")
       }
     }

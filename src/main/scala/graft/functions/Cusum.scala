@@ -18,6 +18,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
   * materializes every sample of a series in a single aggregation buffer
   * (a year of 1 Hz samples = 31M structs in one buffer → executor OOM).
   * Same shape as [[Ema.emaByKey]]; CusumByKeySpec pins both spellings equal.
+  * The live T14 monitor (`Pipelines.cusumAlerts`) runs the same
+  * [[recurrence]] through [[SeriesFold.foldStream]].
   */
 object Cusum {
 
@@ -25,23 +27,25 @@ object Cusum {
   case class CusumRow(user_id: Long, cusum_pos: Double, cusum_neg: Double,
                       alarms: Long, n_points: Long)
 
+  /** (s⁺, s⁻, alarms) — the whole per-series fold state, batch and live. */
+  final case class St(sp: Double, sn: Double, alarms: Long)
+
+  /** THE CUSUM step, zero (0, 0, 0): both sides update on every sample and
+    * `alarms` counts the samples after which either side exceeds `band`. */
+  def recurrence(target: Double, slack: Double, band: Double): SeriesFold.Recurrence[St] =
+    SeriesFold.Recurrence(St(0.0, 0.0, 0L), (s: St, v: Double) => {
+      val sp = math.max(0.0, s.sp + (v - target) - slack)
+      val sn = math.max(0.0, s.sn - (v - target) - slack)
+      St(sp, sn, s.alarms + (if (sp > band || sn > band) 1L else 0L))
+    }, _.alarms)
+
   /** Input columns (any names): key LONG, orderTs LONG, tieId LONG, value
     * DOUBLE. Output is keyed by `user_id` to match the q_cusum registry
     * shape; callers with a different key name re-alias afterwards.
     */
-  /** (s⁺, s⁻, alarms) — the whole per-series fold state. */
-  private final case class St(sp: Double, sn: Double, alarms: Long)
-
   def cusumByKey(df: DataFrame, target: Double, slack: Double, band: Double): Dataset[CusumRow] = {
     implicit val outEnc = Encoders.product[CusumRow]
-    def step(s: St, v: Double): St = {
-      val sp = math.max(0.0, s.sp + (v - target) - slack)
-      val sn = math.max(0.0, s.sn - (v - target) - slack)
-      St(sp, sn, s.alarms + (if (sp > band || sn > band) 1L else 0L))
-    }
-    // the recurrence updates on EVERY row, so the seed folds the first
-    // sample into the zero state (vs EMA/MACD, which anchor at it)
-    SeriesFold.foldByKey(df)(v => step(St(0.0, 0.0, 0L), v))(step)(
+    SeriesFold.foldBatch(df, recurrence(target, slack, band))(
       (k, s, n) => CusumRow(k, s.sp, s.sn, s.alarms, n))
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 
 /** Holt linear (double exponential) smoothing — the O(1)-state scale path
   * (VERDICT r4 #3; InfluxQL HOLT_WINTERS surface, ref README.md:3).
@@ -11,14 +10,18 @@ import org.apache.spark.sql.functions.col
   * b′ = γ·(l′−l) + (1−γ)·b; 1-step forecast = l+b, floor-truncated to 4
   * decimals (bit-deterministic across engines, see q_fill_linear note).
   *
-  * Execution: ONE shuffle on the series key, an in-partition sort on
-  * (key, ts, id), then a single streaming fold per partition — state per
-  * series is (n, v1, l, b) regardless of series length. The collect_list
-  * array form keeps a hot series' entire history in one aggregation
-  * buffer; at 100 TB that buffer is unbounded, this fold is 32 bytes.
+  * Execution: [[SeriesFold.foldByKey]] — ONE shuffle on the series key,
+  * an in-partition sort on (key, ts, id), then a group-adjacent fold —
+  * state per series is (n, v1, l, b) regardless of series length. The
+  * collect_list array form keeps a hot series' entire history in one
+  * aggregation buffer; at 100 TB that buffer is unbounded, this fold is
+  * 32 bytes.
   * Pinned by PlanAuditSpec: no collect_list in q_holt_forecast's plan.
   */
 object Holt {
+
+  /** (n, v₁, l, b): samples folded, the first value, level and trend. */
+  private final case class St(n: Long, v1: Double, l: Double, b: Double)
 
   /** Input columns (k, t, i, v) = (series key, event-time micros, unique
     * tie-break id, value); output one row per key: (k, n, forecast) with
@@ -27,38 +30,13 @@ object Holt {
     * the oracle's `n = 1` branch).
     */
   def holtByKey(df: DataFrame, alpha: Double, gamma: Double): Dataset[(Long, Long, Double)] = {
-    implicit val outEnc = org.apache.spark.sql.Encoders.product[(Long, Long, Double)]
-    implicit val inEnc = org.apache.spark.sql.Encoders.product[(Long, Long, Long, Double)]
-    df.toDF("k", "t", "i", "v")
-      .repartition(col("k"))
-      .sortWithinPartitions("k", "t", "i")
-      .as[(Long, Long, Long, Double)]
-      .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-        var curKey = 0L
-        var n = 0L
-        var v1 = 0.0
-        var l = 0.0
-        var b = 0.0
-        def close(): Unit =
-          if (n > 0) out += ((curKey, n,
-            if (n == 1) v1 else math.floor((l + b) * 10000) / 10000))
-        for ((k, _, _, v) <- it) {
-          if (n == 0 || k != curKey) {
-            close()
-            curKey = k; n = 1; v1 = v
-          } else {
-            n += 1
-            if (n == 2) { l = v; b = v - v1 }
-            else {
-              val lNew = alpha * v + (1 - alpha) * (l + b)
-              b = gamma * (lNew - l) + (1 - gamma) * b
-              l = lNew
-            }
-          }
-        }
-        close()
-        out.iterator
-      }
+    implicit val outEnc = Encoders.product[(Long, Long, Double)]
+    SeriesFold.foldByKey(df)(v => St(1L, v, 0.0, 0.0))((s, v) =>
+      if (s.n == 1L) St(2L, s.v1, v, v - s.v1)
+      else {
+        val l = alpha * v + (1 - alpha) * (s.l + s.b)
+        St(s.n + 1, s.v1, l, gamma * (l - s.l) + (1 - gamma) * s.b)
+      })(
+      (k, s, n) => (k, n, if (n == 1L) s.v1 else math.floor((s.l + s.b) * 10000) / 10000))
   }
 }

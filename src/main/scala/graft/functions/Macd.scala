@@ -25,7 +25,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
   * `collect_list` buffer, so a year of 1 Hz samples never materializes in
   * one aggregation buffer. Left-to-right op order matches the DuckDB
   * recursive-CTE oracle exactly; floor-truncation only at the end
-  * (Q.scala parity rules).
+  * (Q.scala parity rules). The live T18 monitor
+  * (`Pipelines.macdCrossings`) runs the same [[recurrence]] through
+  * [[SeriesFold.foldStream]].
   */
 object Macd {
 
@@ -37,24 +39,32 @@ object Macd {
   case class MacdRow(user_id: Long, macd: Double, signal_line: Double,
                      histogram: Double, crossings: Long, n_points: Long)
 
-  /** (ef, es, m, sg, crossings) — the whole per-series fold state. */
-  private final case class St(ef: Double, es: Double, m: Double, sg: Double,
-                              crossings: Long)
+  /** (warm, ef, es, m, sg, crossings) — the whole per-series fold state,
+    * batch and live; `warm` is false only before the first sample. */
+  final case class St(warm: Boolean, ef: Double, es: Double, m: Double, sg: Double,
+                      crossings: Long)
+
+  /** THE MACD step: the first sample seeds ef = es = v (macd = signal = 0);
+    * each later sample updates all three EMAs and counts a crossing when
+    * the histogram changes sign. */
+  val recurrence: SeriesFold.Recurrence[St] =
+    SeriesFold.Recurrence(St(false, 0.0, 0.0, 0.0, 0.0, 0L), (s: St, v: Double) =>
+      if (!s.warm) St(true, v, v, 0.0, 0.0, 0L)
+      else {
+        val ef = s.ef + AlphaFast * (v - s.ef)
+        val es = s.es + AlphaSlow * (v - s.es)
+        val m2 = ef - es
+        val sg2 = s.sg + AlphaSig * (m2 - s.sg)
+        St(true, ef, es, m2, sg2,
+          s.crossings + (if ((m2 - sg2) * (s.m - s.sg) < 0) 1L else 0L))
+      }, _.crossings)
 
   /** Input columns (any names): key LONG, orderTs LONG, tieId LONG, value
     * DOUBLE. Series with one sample report macd=signal=histogram=0.
     */
   def macdByKey(df: DataFrame): Dataset[MacdRow] = {
     implicit val outEnc = Encoders.product[MacdRow]
-    SeriesFold.foldByKey(df)(v0 => St(v0, v0, 0.0, 0.0, 0L))(
-      (s, v) => {
-        val ef = s.ef + AlphaFast * (v - s.ef)
-        val es = s.es + AlphaSlow * (v - s.es)
-        val m2 = ef - es
-        val sg2 = s.sg + AlphaSig * (m2 - s.sg)
-        St(ef, es, m2, sg2,
-          s.crossings + (if ((m2 - sg2) * (s.m - s.sg) < 0) 1L else 0L))
-      })(
+    SeriesFold.foldBatch(df, recurrence)(
       (k, s, n) => MacdRow(k, s.m, s.sg, s.m - s.sg, s.crossings, n))
   }
 }

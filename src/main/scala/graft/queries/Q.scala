@@ -223,6 +223,7 @@ object Q {
   def stackedNtile(df: DataFrame, buckets: Int,
       values: Seq[Column], ties: Seq[Column], out: String): DataFrame = {
     import df.sparkSession.implicits._
+    requireNoRankHelpers(df)
     val cols = df.columns.toSeq
     val k = values.size
     val stacked = df.select(cols.map(col) :+
@@ -249,6 +250,17 @@ object Q {
       .select((cols :+ "__sid" :+ out).map(col): _*)
   }
 
+  /** Helper columns the rank passes add to the caller's frame. An input
+    * column of the same name would be shadowed or joined on, giving a
+    * wrong rank or an analysis error, so it is rejected up front. */
+  private val RankHelperCols = Set("__sv", "__sid", "__val", "__pid", "__off", "__rk")
+
+  private def requireNoRankHelpers(df: DataFrame): Unit = {
+    val clash = df.columns.filter(RankHelperCols)
+    require(clash.isEmpty, s"rank input columns ${clash.mkString(", ")} collide " +
+      s"with the reserved helper columns ${RankHelperCols.toSeq.sorted.mkString(", ")}")
+  }
+
   /** The shared two-pass core: range-partition on `sort`, freeze pids,
     * collect the k per-partition counts (k = shuffle partitions,
     * driver-bounded), then per-partition row_number + broadcast prefix
@@ -257,6 +269,7 @@ object Q {
   private def rankedWithTotal(
       df: DataFrame, sort: Seq[Column], out: String): (DataFrame, Long) = {
     import df.sparkSession.implicits._
+    requireNoRankHelpers(df)
     val cols = df.columns.toSeq
     val keyed = df.repartitionByRange(sort: _*)
       .withColumn("__pid", spark_partition_id())

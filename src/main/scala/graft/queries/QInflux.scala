@@ -491,8 +491,9 @@ object QInflux {
         "seeded at the target 50.0), alarm when |z − 50| exceeds L·σ_z with L = 3 " +
         "and σ_z the asymptotic EWMA σ·sqrt(λ/(2−λ)) for spec'd σ = 10 (fixed " +
         "constants keep the fold oracle-checkable, the q_cusum convention). " +
-        "Fourth consumer of the shared SeriesFold O(1)-state pass — one shuffle " +
-        "on the series key, no collect_list buffer. The alarm band is a constant " +
+        "The recurrence is functions/Ewma.scala, shared with the live T19 monitor, " +
+        "run through SeriesFold's batch adapter — one shuffle on the series key, " +
+        "no collect_list buffer. The alarm band is a constant " +
         "both engines fold identically; only the terminal z is floor-truncated.",
       """WITH RECURSIVE o AS (
         |  SELECT user_id, list(value ORDER BY ts, event_id) AS vals, count(*) AS n
@@ -511,17 +512,12 @@ object QInflux {
         |       floor(z * 10000) / 10000 AS ewma,
         |       alarms, n AS n_points
         |FROM s WHERE i = n ORDER BY user_id""".stripMargin) { (s, dir) =>
-      import org.apache.spark.sql.Encoders
-      implicit val enc = Encoders.product[(Long, Double, Long, Long)]
-      val band = 3.0 * (10.0 * math.sqrt(0.2 / 1.8))
-      graft.functions.SeriesFold.foldByKey(
-          events(s, dir).select(col("user_id"), col("ts_ns"), col("event_id"), col("value")))(
-          v => { val z = 0.2 * v + 0.8 * 50.0
-                 (z, if (math.abs(z - 50.0) > band) 1L else 0L) })(
-          { case ((z, a), v) =>
-              val z2 = 0.2 * v + 0.8 * z
-              (z2, a + (if (math.abs(z2 - 50.0) > band) 1L else 0L)) })(
-          (k, st, n) => (k, st._1, st._2, n))
+      import graft.functions.{Ewma, SeriesFold}
+      implicit val enc = org.apache.spark.sql.Encoders.product[(Long, Double, Long, Long)]
+      SeriesFold.foldBatch(
+          events(s, dir).select(col("user_id"), col("ts_ns"), col("event_id"), col("value")),
+          Ewma.recurrence(lambda = 0.2, target = 50.0, band = Ewma.Band))(
+          (k, st, n) => (k, st.z, st.alarms, n))
         .toDF("user_id", "z", "alarms", "n_points")
         .select(col("user_id"),
           (floor(col("z") * 10000) / 10000).as("ewma"),

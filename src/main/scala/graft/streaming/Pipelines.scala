@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.functions.{Cusum, Ewma, Macd, SeriesFold}
 import graft.queries.QStream
 import graft.sinks.LineProtocol
 import graft.sources.TagConfig
@@ -16,8 +17,7 @@ case class BandChange(event_id: Long, user_id: Long, band: Long)
 /** Output of the deadman pipeline (T12): a series went silent. */
 case class DeadmanAlert(user_id: Long, last_seen: java.sql.Timestamp, silent_for_ms: Long)
 
-/** Input/output rows of the streaming CUSUM pipeline (T14, r10). */
-case class CusumSample(event_id: Long, user_id: Long, ts: java.sql.Timestamp, value: Double)
+/** Output of the streaming CUSUM pipeline (T14, r10). */
 case class CusumAlarm(event_id: Long, user_id: Long, ts: java.sql.Timestamp,
     cusum_pos: Double, cusum_neg: Double)
 
@@ -88,21 +88,13 @@ case class FeatState(n: Long, ring: Seq[Double],
   *
   * Streaming transforms reuse the oracle-checked batch twins in
   * [[QStream]] — one plan, two execution modes; parity is asserted by
-  * StreamingParitySpec over MemoryStream inputs.
+  * StreamingParitySpec over MemoryStream inputs. The live control charts
+  * (T14 CUSUM, T18 MACD, T19 EWMA) hold no arithmetic of their own: each
+  * runs its batch key's single recurrence definition (functions/Cusum,
+  * Macd, Ewma) through [[SeriesFold.foldStream]], the live adapter next to
+  * the batch [[SeriesFold.foldBatch]].
   */
 object Pipelines {
-
-  /** Deterministic fold order inside one micro-batch group: (ts, event_id).
-    * Spark hands flatMapGroupsWithState an UNORDERED iterator over the
-    * group's slice of the CURRENT micro-batch, so the fold buffers and
-    * sorts that slice on the executor. The buffer is bounded by micro-batch
-    * size (trigger interval × per-series ingest rate), NOT by stream
-    * history — the O(1)-state claims of these folds refer to the
-    * checkpointed per-series state, which never grows; intra-batch
-    * buffering is the standard cost of ordered stateful folds.
-    */
-  private def eventTimeOrdered[T](it: Iterator[T])(key: T => (Long, Long)): Seq[T] =
-    it.toSeq.sortBy(key)
 
   /** T4 + T7: watermarked tumbling aggregation over a streaming frame. */
   def tumbling(stream: DataFrame, watermark: String = "30 seconds"): DataFrame =
@@ -161,7 +153,7 @@ object Pipelines {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (_: Long, it: Iterator[BandSample], state: GroupState[Long]) => {
-          val sorted = eventTimeOrdered(it)(e => (e.ts.getTime, e.event_id))
+          val sorted = SeriesFold.eventTimeOrdered(it)(e => (e.ts.getTime, e.event_id))
           var last: Option[Long] = if (state.exists) Some(state.get) else None
           val out = sorted.flatMap { e =>
             if (last.contains(e.band)) None
@@ -214,116 +206,64 @@ object Pipelines {
   }
 
   /** T14 (r10): streaming CUSUM drift alarms — the LIVE twin of the batch
-    * q_cusum control chart (same recurrence, same constants): each series
-    * carries exactly (s⁺, s⁻, alarms) in checkpointed state — O(1) per
-    * series, the scale story the batch fold earns via its streaming
-    * group-adjacent pass — and a row is EMITTED only when a side exceeds
-    * the alarm band after its update (alarms ≪ samples, like the deadman).
-    * Rows inside one micro-batch group fold in (ts, event_id) order, so a
-    * stream fed in event-time order reproduces the batch fold exactly;
-    * CusumStreamSpec pins terminal state and alarm count against
-    * [[graft.functions.Cusum.cusumByKey]] across multi-batch feeds.
+    * q_cusum control chart: [[Cusum.recurrence]] (same step, same
+    * constants) through [[SeriesFold.foldStream]]. State: (s⁺, s⁻, alarms)
+    * per series, checkpointed — O(1) per series — and a row is EMITTED only
+    * when a side exceeds the alarm band after its update (alarms ≪
+    * samples, like the deadman). CusumStreamSpec pins terminal state and
+    * alarm count against [[Cusum.cusumByKey]] across multi-batch feeds.
     */
   def cusumAlerts(stream: DataFrame, target: Double = 50.0, slack: Double = 2.0,
       band: Double = 100.0): Dataset[CusumAlarm] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .select(col("event_id"), col("user_id"), col("ts"), col("value").cast("double").as("value"))
-      .as[CusumSample]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, it: Iterator[CusumSample], state: GroupState[(Double, Double, Long)]) => {
-          val sorted = eventTimeOrdered(it)(e => (e.ts.getTime, e.event_id))
-          var (sp, sn, alarms) = state.getOption.getOrElse((0.0, 0.0, 0L))
-          val out = sorted.flatMap { e =>
-            sp = math.max(0.0, sp + (e.value - target) - slack)
-            sn = math.max(0.0, sn - (e.value - target) - slack)
-            if (sp > band || sn > band) {
-              alarms += 1
-              Some(CusumAlarm(e.event_id, uid, e.ts, sp, sn))
-            } else None
-          }
-          state.update((sp, sn, alarms))
-          out.iterator
-        })
+    SeriesFold.foldStream(stream, Cusum.recurrence(target, slack, band))(
+      (e, s) => CusumAlarm(e.event_id, e.user_id, e.ts, s.sp, s.sn))
   }
 
   /** T18 (r11): streaming MACD trend-flip alerts — the LIVE twin of the
-    * batch q_macd fold ([[graft.functions.Macd.macdByKey]]): identical
-    * recurrence and constants (12/26/9-period EMAs, both fast EMAs seeded
-    * at the series' first value), all three EMAs carried in ONE
-    * checkpointed state tuple — O(1) per series, the SeriesFold contract
-    * live. A row is EMITTED only when the histogram changes sign after an
-    * update (crossings ≪ samples, the cusumAlerts shape). Rows inside one
-    * micro-batch group fold in (ts, event_id) order, so a stream fed in
-    * event-time order reproduces the batch fold exactly; MacdStreamSpec
+    * batch q_macd fold: [[Macd.recurrence]] (12/26/9-period EMAs, both
+    * seeded at the series' first value) through [[SeriesFold.foldStream]].
+    * State: (warm, ef, es, m, sg, crossings) per series, checkpointed — all
+    * three EMAs in ONE O(1) state. A row is EMITTED only when the histogram
+    * changes sign after an update (crossings ≪ samples). MacdStreamSpec
     * pins crossing counts and crossing-point state against the batch fold
     * across multi-batch feeds, including a checkpointed restart.
-    *
-    * State: (ef, es, m, sg, n). n distinguishes "no samples yet" (seed the
-    * EMAs at the first value) from "warm" — the batch seed convention.
     */
   def macdCrossings(stream: DataFrame): Dataset[MacdCross] = {
-    import graft.functions.Macd.{AlphaFast, AlphaSlow, AlphaSig}
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .select(col("event_id"), col("user_id"), col("ts"), col("value").cast("double").as("value"))
-      .as[CusumSample]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, it: Iterator[CusumSample], state: GroupState[(Double, Double, Double, Double, Long)]) => {
-          val sorted = eventTimeOrdered(it)(e => (e.ts.getTime, e.event_id))
-          var (ef, es, m, sg, n) = state.getOption.getOrElse((0.0, 0.0, 0.0, 0.0, 0L))
-          val out = sorted.flatMap { e =>
-            if (n == 0L) { ef = e.value; es = e.value; m = 0.0; sg = 0.0; n = 1L; None }
-            else {
-              ef += AlphaFast * (e.value - ef)
-              es += AlphaSlow * (e.value - es)
-              val m2 = ef - es
-              val sg2 = sg + AlphaSig * (m2 - sg)
-              val crossed = (m2 - sg2) * (m - sg) < 0
-              m = m2; sg = sg2; n += 1
-              if (crossed) Some(MacdCross(e.event_id, uid, e.ts, m, sg, m - sg)) else None
-            }
-          }
-          state.update((ef, es, m, sg, n))
-          out.iterator
-        })
+    SeriesFold.foldStream(stream, Macd.recurrence)(
+      (e, s) => MacdCross(e.event_id, e.user_id, e.ts, s.m, s.sg, s.m - s.sg))
   }
 
   /** T19 (r11): streaming EWMA control chart — the LIVE twin of the batch
-    * q_ewma_chart fold (QInflux.scala): z ← λ·v + (1−λ)·z with λ = 0.2
-    * seeded at the target 50.0 (so the FIRST sample already updates z, the
-    * batch seed convention), alarm when |z − 50| > L·σ_z for L = 3,
-    * σ_z = σ·sqrt(λ/(2−λ)), σ = 10. One (z, alarms) tuple of checkpointed
-    * state per series; rows emit only on alarm. EwmaStreamSpec pins alarm
+    * q_ewma_chart fold: [[Ewma.recurrence]] (z ← λ·v + (1−λ)·z seeded at
+    * the target, alarm when |z − target| > band) through
+    * [[SeriesFold.foldStream]]. State: (z, alarms) per series,
+    * checkpointed; rows emit only on alarm. EwmaStreamSpec pins alarm
     * counts and alarm-point z against the batch fold across multi-batch
     * feeds.
     */
   def ewmaAlerts(stream: DataFrame, lambda: Double = 0.2, target: Double = 50.0,
-      band: Double = 3.0 * (10.0 * math.sqrt(0.2 / 1.8))): Dataset[EwmaAlarm] = {
+      band: Double = Ewma.Band): Dataset[EwmaAlarm] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .select(col("event_id"), col("user_id"), col("ts"), col("value").cast("double").as("value"))
-      .as[CusumSample]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, it: Iterator[CusumSample], state: GroupState[(Double, Long)]) => {
-          val sorted = eventTimeOrdered(it)(e => (e.ts.getTime, e.event_id))
-          var (z, alarms) = state.getOption.getOrElse((target, 0L))
-          val out = sorted.flatMap { e =>
-            z = lambda * e.value + (1.0 - lambda) * z
-            if (math.abs(z - target) > band) {
-              alarms += 1
-              Some(EwmaAlarm(e.event_id, uid, e.ts, z))
-            } else None
-          }
-          state.update((z, alarms))
-          out.iterator
-        })
+    SeriesFold.foldStream(stream, Ewma.recurrence(lambda, target, band))(
+      (e, s) => EwmaAlarm(e.event_id, e.user_id, e.ts, s.z))
+  }
+
+  /** The sketch monitors' emit gate (T20, T21, T23): emit when the
+    * estimate changed and moved by more than `minRelDelta · max(last, 1)`
+    * since the last emission; `last < 0` means never emitted, which always
+    * emits. Differences are taken in the estimate's own type (exact for
+    * Long counts) before widening to Double.
+    */
+  private def sketchMoved[N](est: N, last: N, minRelDelta: Double)(
+      implicit num: Numeric[N]): Boolean = {
+    import num._
+    (last < zero || abs(est - last).toDouble > minRelDelta * max(last, one).toDouble) &&
+      est != last
   }
 
   /** T20 (r11): streaming HLL cardinality monitor — the LIVE twin of the
@@ -379,15 +319,9 @@ object Pipelines {
           val estRaw = 0.709 * 4096.0 / s
           val est = if (estRaw <= 160.0 && zeros > 0) 64.0 * math.log(64.0 / zeros)
                     else estRaw
-          val moved = lastEst < 0.0 ||
-            math.abs(est - lastEst) > minRelDelta * math.max(lastEst, 1.0)
-          if (moved && est != lastEst) {
-            state.update((regs, n, est))
-            Iterator.single(HllEstimate(etype, n, zeros, est))
-          } else {
-            state.update((regs, n, lastEst))
-            Iterator.empty
-          }
+          val emit = sketchMoved(est, lastEst, minRelDelta)
+          state.update((regs, n, if (emit) est else lastEst))
+          if (emit) Iterator.single(HllEstimate(etype, n, zeros, est)) else Iterator.empty
         })
   }
 
@@ -439,11 +373,9 @@ object Pipelines {
           val out = watch.zipWithIndex.flatMap { case (u, wi) =>
             val cs = cells(u)
             val est = CmsA.indices.map(i => grid(i * 512 + cs(i))).min
-            val last = lastEmit(wi)
-            val moved = last < 0L ||
-              math.abs(est - last).toDouble > minRelDelta * math.max(last, 1L).toDouble
-            if (moved && est != last) { lastEmit(wi) = est; Some(CmsEstimate(etype, u, est, n)) }
-            else None
+            if (sketchMoved(est, lastEmit(wi), minRelDelta)) {
+              lastEmit(wi) = est; Some(CmsEstimate(etype, u, est, n))
+            } else None
           }
           state.update((grid, n, lastEmit))
           out.iterator
@@ -558,15 +490,9 @@ object Pipelines {
             acc / 32L
           }
           val est = gm.sum - gm.max - gm.min
-          val moved = lastEst < 0L ||
-            math.abs(est - lastEst).toDouble > minRelDelta * math.max(lastEst, 1L).toDouble
-          if (moved && est != lastEst) {
-            state.update((sums, n, est))
-            Iterator.single(AmsF2Estimate(etype, n, est))
-          } else {
-            state.update((sums, n, lastEst))
-            Iterator.empty
-          }
+          val emit = sketchMoved(est, lastEst, minRelDelta)
+          state.update((sums, n, if (emit) est else lastEst))
+          if (emit) Iterator.single(AmsF2Estimate(etype, n, est)) else Iterator.empty
         })
   }
 
@@ -588,11 +514,11 @@ object Pipelines {
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     stream
       .select(col("event_id"), col("user_id"), col("ts"), col("value").cast("double").as("value"))
-      .as[CusumSample]
+      .as[SeriesFold.Sample]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (uid: Long, it: Iterator[CusumSample], state: GroupState[FeatState]) => {
-          val sorted = eventTimeOrdered(it)(e => (e.ts.getTime, e.event_id))
+        (uid: Long, it: Iterator[SeriesFold.Sample], state: GroupState[FeatState]) => {
+          val sorted = SeriesFold.eventTimeOrdered(it)(e => (e.ts.getTime, e.event_id))
           var st = state.getOption.getOrElse(FeatState(0L, Nil, None))
           val out = scala.collection.mutable.ArrayBuffer.empty[FeatureRow]
           for (e <- sorted) {

@@ -101,6 +101,17 @@ class RfmNtileSpec extends SparkTestBase {
     assert(Q.stackedNtile(empty, 5, Seq(col("v")), Seq(col("id")), "nt").count() === 0L)
   }
 
+  test("rank helpers reject an input frame that carries a reserved helper column") {
+    import spark.implicits._
+    val df = (1 to 5).map(i => (i.toLong, i.toDouble, 7)).toDF("id", "v", "__pid")
+    intercept[IllegalArgumentException] {
+      Q.distributedNtile(df, 2, Seq(col("v"), col("id")), "nt")
+    }
+    intercept[IllegalArgumentException] {
+      Q.stackedNtile(df, 2, Seq(col("v")), Seq(col("id")), "nt")
+    }
+  }
+
   test("q_rfm_segments: distributed branch == legacy global-window branch on real orders") {
     val dir = "/root/testdata/sf0.001"
     val dist = Registry.byName("q_rfm_segments").run(spark, dir).collect()
